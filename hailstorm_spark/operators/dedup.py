@@ -967,38 +967,6 @@ def incremental_components_update(
     return relabeled.unionByName(new_nodes)
 
 
-def incremental_components_changes(
-    labels: DataFrame,
-    new_edges: DataFrame,
-    resolution_labels: DataFrame | None = None,
-) -> DataFrame:
-    """The DELTA form of :func:`incremental_components_update`: only
-    the rows a keyed-state maintainer must rewrite — standing nodes
-    whose label CHANGES (their old label was merged into a smaller
-    one) plus the delta's brand-new nodes. Same contraction math; the
-    relabel join carries only the strictly-changing mapping rows
-    (broadcast), so the write side is O(|affected cluster members| +
-    |new nodes|) — untouched clusters' rows are never emitted, which
-    is what lets a latest-wins fold maintain a standing label table
-    with per-batch writes proportional to the merge, not the state.
-
-    ``resolution_labels``: see :func:`incremental_components_update` —
-    the delta-bounded read path for per-micro-batch callers. With it,
-    the ONLY touch of the full standing table left on this path is the
-    relabel probe, a scan-side BroadcastHashJoin (no Exchange over
-    ``labels``; plan-pinned in tests/test_plans.py).
-    """
-    merged, new_nodes = _incremental_components_parts(
-        labels, new_edges, resolution_labels
-    )
-    changed = merged.filter(F.col("old_label") != F.col("new_label"))
-    relabeled_changed = labels.join(
-        F.broadcast(changed),
-        labels.cluster_id == changed.old_label,
-    ).select("doc_id", F.col("new_label").alias("cluster_id"))
-    return relabeled_changed.unionByName(new_nodes)
-
-
 def _resolve_delta_endpoints(
     labels: DataFrame, new_edges: DataFrame, broadcast_labels: bool
 ) -> DataFrame:

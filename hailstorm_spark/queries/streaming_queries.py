@@ -952,7 +952,11 @@ def _keyed_pair_probe(batch: DataFrame, state_dir: str, keycol: str) -> DataFram
     filter over the ``bucket_col=keycol`` layout; the pruning modulus
     comes from the layout's own ``_n_buckets`` stamp (ADVICE r13), so
     a rebucketed store can never be probed with a stale count."""
-    from hailstorm_spark.streaming.statefold import _has_state, state_bucket_count
+    from hailstorm_spark.streaming.statefold import (
+        _has_state,
+        read_layout,
+        state_bucket_count,
+    )
 
     s = batch.sparkSession
     sides = [batch.select("doc_id", keycol)]
@@ -969,7 +973,7 @@ def _keyed_pair_probe(batch: DataFrame, state_dir: str, keycol: str) -> DataFram
             .collect()
         ]
         sides.append(
-            s.read.parquet(state_dir)
+            read_layout(s, state_dir)
             .filter(F.col("bucket").isin(touched))
             .select("doc_id", keycol)
         )
@@ -1207,6 +1211,7 @@ def _semantic_verify_pairs(
     from hailstorm_spark.queries.similarity import NEAR_DUP_THRESHOLD
     from hailstorm_spark.streaming.statefold import (
         _has_state,
+        read_layout,
         state_bucket_count,
     )
 
@@ -1228,7 +1233,7 @@ def _semantic_verify_pairs(
             .collect()
         ]
         sides.append(
-            s.read.parquet(vec_dir)
+            read_layout(s, vec_dir)
             .filter(F.col("bucket").isin(touched))
             .join(F.broadcast(ids), "vid")
             # a replayed batch's rows are standing too — batch rows
@@ -4748,7 +4753,7 @@ def _er_pruned_endpoint_labels(
     filter and the broadcast join on THIS frame (the production caller
     checkpoints it immediately, which hides its plan). The pruning
     modulus comes from the layout's ``_n_buckets`` stamp (ADVICE r13)."""
-    from hailstorm_spark.streaming.statefold import state_bucket_count
+    from hailstorm_spark.streaming.statefold import read_layout, state_bucket_count
 
     endpoints = (
         pairs.select(F.col("doc_a").alias("doc_id"))
@@ -4767,7 +4772,7 @@ def _er_pruned_endpoint_labels(
         .collect()
     ]
     return (
-        s.read.parquet(labels_dir)
+        read_layout(s, labels_dir)
         .filter(F.col("bucket").isin(touched))
         .join(F.broadcast(endpoints), "doc_id")
         .select("doc_id", "cluster_id")
@@ -4782,7 +4787,7 @@ def _er_pair_probe(batch: DataFrame, rec_dir: str, keycol: str) -> DataFrame:
     a < b. The standing read is a static partition filter over the
     ``bucket_col=keycol`` layout — the blocked-index promise."""
     from hailstorm_spark.queries.dedup import _ER_CENTS_TOL, _ER_NAME_DIST
-    from hailstorm_spark.streaming.statefold import _has_state
+    from hailstorm_spark.streaming.statefold import _has_state, read_layout
 
     s = batch.sparkSession
     sides = [batch]
@@ -4801,7 +4806,7 @@ def _er_pair_probe(batch: DataFrame, rec_dir: str, keycol: str) -> DataFrame:
             .collect()
         ]
         standing = (
-            s.read.parquet(rec_dir)
+            read_layout(s, rec_dir)
             .filter(F.col("bucket").isin(touched))
             .select(*batch.columns)
         )
@@ -5087,6 +5092,7 @@ def _er_indexed_changes_local(
     from hailstorm_spark.functions.hashing import spark_bucket
     from hailstorm_spark.streaming.statefold import (
         _has_state,
+        read_layout,
         state_bucket_count,
     )
 
@@ -5101,7 +5107,7 @@ def _er_indexed_changes_local(
         ep_df = local_df(s, [(e,) for e in endpoints], "doc_id long")
         labels = {
             r["doc_id"]: r["cluster_id"]
-            for r in s.read.parquet(labels_dir)
+            for r in read_layout(s, labels_dir)
             .filter(F.col("bucket").isin(touched))
             .join(F.broadcast(ep_df), "doc_id")
             .select("doc_id", "cluster_id")
@@ -5140,7 +5146,7 @@ def _er_indexed_changes_local(
     touched_i = sorted({spark_bucket(o, n_bi) for o, _ in changed})
     changed_df = local_df(s, changed, "old_label long, new_label long")
     members = (
-        s.read.parquet(index_dir)
+        read_layout(s, index_dir)
         .filter(F.col("bucket").isin(touched_i))
         .filter(F.col("alive") == 1)
         .join(
@@ -5261,7 +5267,7 @@ def _er_indexed_changes(
             "old_label long, new_label long",
         )
     from hailstorm_spark.functions.hashing import spark_bucket
-    from hailstorm_spark.streaming.statefold import state_bucket_count
+    from hailstorm_spark.streaming.statefold import read_layout, state_bucket_count
 
     n_b = state_bucket_count(index_dir, _ER_STATE_BUCKETS)
     if len(changed_rows) <= DELTA_CLOSURE_LOCAL_CAP:
@@ -5283,7 +5289,7 @@ def _er_indexed_changes(
             .collect()
         ]
     members = (
-        s.read.parquet(index_dir)
+        read_layout(s, index_dir)
         .filter(F.col("bucket").isin(touched))
         .filter(F.col("alive") == 1)
         .join(

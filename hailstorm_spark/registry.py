@@ -61,11 +61,9 @@ def register(
 #: Round-11 NEW registrations, in check order. Kept small enough that
 #: the whole window (re-pins + new) stays inside the driver's ~50-row
 #: cap; every new query gets a driver row the round it ships, nothing
-#: enters the backlog. A snapshot-derived test
-#: (tests/test_oracle_parity.py, registry_snapshot_r10.json) FAILS if a
-#: query registers without appearing here — the hand-maintained tuple
-#: cannot silently go stale (ADVICE r7; refrozen at the r10→r11
-#: boundary per the guard's rotation protocol).
+#: enters the backlog (R11_NEW below). The snapshot-derived guard in
+#: tests/test_oracle_parity.py has since rotated: it now checks R14_NEW
+#: against registry_snapshot_r13.json, the only snapshot kept.
 #: Round-14 NEW registrations, in check order (same protocol: every
 #: new query gets a driver row the round it ships; the snapshot guard
 #: in tests/test_oracle_parity.py fails if a registration is missing
@@ -149,9 +147,9 @@ R14_BACKFILL: tuple[str, ...] = (
 )
 
 #: Round-13 NEW registrations, in check order (same protocol: every
-#: new query gets a driver row the round it ships; the snapshot guard
-#: in tests/test_oracle_parity.py fails if a registration is missing
-#: here — refrozen at the r12→r13 boundary, registry_snapshot_r12.json).
+#: new query got a driver row the round it shipped; the snapshot guard
+#: in tests/test_oracle_parity.py has since rotated to R14_NEW and
+#: registry_snapshot_r13.json, which includes every name below).
 R13_NEW: tuple[str, ...] = (
     # q-gram blocking with a recall THEOREM (judge r12 item 2): each
     # record emits its 7 canonically-smallest positional 3-grams; the

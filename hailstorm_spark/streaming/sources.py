@@ -37,17 +37,6 @@ def file_lines_stream(
     return reader.load(path).withColumnRenamed("value", "line")
 
 
-def file_json_stream(
-    spark: SparkSession, path: str, schema, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """JSON-file stream with an explicit schema (schema inference is a
-    blocking pre-pass — never at 100 TB)."""
-    reader = spark.readStream.schema(schema).format("json")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
-
-
 def rate_words_stream(
     spark: SparkSession, vocabulary: list[str], rows_per_second: int = 1000
 ) -> DataFrame:
@@ -76,28 +65,14 @@ def rate_words_stream(
 def kafka_payload(df: DataFrame, value_col: str, key_col: str | None = None) -> DataFrame:
     """Project any frame into the Kafka writer contract: binary
     ``value`` (and optional ``key`` for partition affinity). Spark's
-    Kafka sink requires exactly this shape; keeping it a separate,
-    batch-testable projection means the emitter itself is a one-liner.
+    Kafka sink requires exactly this shape; as a separate projection it
+    is batch-testable without a broker, and a producer is then one
+    ``.write.format("kafka")`` call.
     """
     cols = [F.col(value_col).cast("string").cast("binary").alias("value")]
     if key_col is not None:
         cols.insert(0, F.col(key_col).cast("string").cast("binary").alias("key"))
     return df.select(*cols)
-
-
-def kafka_words_emitter(words: DataFrame, brokers: str, topic: str):
-    """Batch Kafka producer (reference S5, WordCountKafkaEmitter.hs:18-37:
-    a loop pushing words at a fixed rate). The Spark form is a bounded
-    DataFrame written to the topic — distributed, no 5k msg/s
-    single-producer ceiling; returns the configured writer (caller
-    invokes .save()). Untested against a live broker here (none in the
-    sandbox); the payload projection is batch-tested."""
-    return (
-        kafka_payload(words, value_col="word", key_col="word")
-        .write.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-    )
 
 
 def kafka_words_stream(

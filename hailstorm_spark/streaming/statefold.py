@@ -10,8 +10,8 @@ a thousand-row change batch. This module applies the same discipline
 1. the state table lives in ONE directory, hash-partitioned on
    ``bucket = pmod(xxhash64(key), n_buckets)``;
 2. each batch computes its TOUCHED buckets (a bounded collect of at
-   most ``n_buckets`` ints — the distinct-bucket aggregation is one
-   tiny shuffle of the batch only);
+   most ``n_buckets`` ints — one partial aggregate per batch partition
+   feeding a single final task, see ``_buckets_of``);
 3. only those buckets' standing rows are read back (``isin`` on the
    partition column — a static partition filter, so the scan prunes
    to the touched directories and the cold buckets are never opened);
@@ -54,20 +54,33 @@ must be survivable, ride a transactional table format instead; this
 module is the layout/algorithm layer, not the commit protocol.
 
 Layout contract on disk: ``bucket=<i>/`` parquet partition directories
-plus two tiny driver-side markers — ``_n_buckets`` (the bucket count
-the layout was written with; folds check it and refuse a mismatched
-configuration, which would prune standing reads with the wrong modulus
-and silently duplicate keys) and ``_epoch`` (the checkpoint identity
-fencing the additive fold's ``_b`` batch-id stamps; see
-``_check_epoch``). ``rebucket_state`` carries both markers across a
-migration.
+plus tiny driver-side sidecars, each committed by tmp + rename:
 
-Schema evolution envelope (both folds): ADD-only, batch-authoritative.
+- ``_n_buckets``: the bucket count the layout was written with; folds
+  check it and refuse a mismatched configuration, which would prune
+  standing reads with the wrong modulus and silently duplicate keys;
+- ``_epoch``: the checkpoint identity fencing the additive fold's
+  ``_b`` batch-id stamps (see ``_check_epoch``);
+- ``_monoid.json``: the monoid fold's key and per-column ops, which
+  ``read_state`` merges segments with;
+- ``_schema.json``: the layout's merged data schema (the ``bucket``
+  partition column is implied). Every fold — latest-wins rewrite,
+  immutable append, monoid append and compaction — stamps it before
+  its data write, so it covers every committed file; ``rebucket_state``
+  restamps it for the uniform layout it writes.
+
+``rebucket_state`` carries every sidecar across a migration.
+
+Schema evolution envelope (all folds): ADD-only, batch-authoritative.
 The standing read uses the batch's schema explicitly, so a column the
 batch adds is NULL-filled from old files, and a column the batch stops
 sending is dropped from TOUCHED buckets at their next rewrite
-(untouched buckets keep their bytes until touched — ``read_state``
-merges footers so mixed-schema layouts read consistently). For the
+(untouched buckets keep their bytes until touched). Mixed-schema
+layouts read consistently because ``read_layout``/``read_state`` read
+through the ``_schema.json`` stamp — the merge of every schema ever
+written, with no footer-merge job. A batch that drops a stamped column
+deletes the stamp (the stamp only ever grows), and an unstamped layout
+is read by merging footers, as before the stamp existed. For the
 additive fold a newly added sum column is NULL (not 0) for keys with
 no contribution since the column appeared — "never observed", not
 "observed zero".
@@ -89,6 +102,7 @@ __all__ = [
     "bucketed_latest_fold",
     "bucketed_monoid_fold",
     "compact_expired_tombstones",
+    "read_layout",
     "read_state",
     "rebucket_state",
     "state_bucket_count",
@@ -97,6 +111,7 @@ __all__ = [
 _EPOCH_FILE = "_epoch"
 _LAYOUT_FILE = "_n_buckets"
 _MONOID_FILE = "_monoid.json"
+_SCHEMA_FILE = "_schema.json"
 
 #: log-structured segment threshold (r15): an append-mode bucket whose
 #: file count reaches this is folded down to ONE segment by the same
@@ -106,7 +121,7 @@ _MONOID_FILE = "_monoid.json"
 #: one bucket-local rewrite every K touches — the LSM trade. A dial,
 #: not a core-count tune: the right K is about merge amortization and
 #: is scale-independent.
-_COMPACT_SEGMENTS = int(os.environ.get("SPARK_GRAFT_STATE_COMPACT_SEGMENTS", "8"))
+_COMPACT_SEGMENTS = 8
 
 
 def _bucket_file_counts(state_dir: str) -> dict[int, int]:
@@ -135,9 +150,15 @@ def _bucket_file_counts(state_dir: str) -> dict[int, int]:
 def _plan_pinned(s, n_buckets: int):
     """Run a fold's actions with AQE off and the shuffle width derived
     from the LAYOUT, not the session. The fold plans are FIXED SHAPE —
-    a touched-bucket distinct, a fence read, and a union → aggregate →
-    ``repartition(n_buckets)`` → dynamic-overwrite write whose output
-    partitioning is pinned by the on-disk layout — so adaptive
+    a touched-bucket collect, a fence read, and a write whose one
+    exchange is ``repartition(n_buckets, bucket)`` with the per-key
+    aggregation running inside that partitioning (bucket is a function
+    of the key, so (key, bucket) groups never span partitions): batch
+    (∪ touched standing rows) → Exchange → HashAggregate → one file per
+    touched bucket. Only the latest-wins fold with a ``bucket_col``
+    other than its key keeps a second exchange, because its
+    functional-dependence check groups by key across buckets. The
+    output partitioning is pinned by the on-disk layout — so adaptive
     execution has nothing to adapt (no joins, no skew, the final
     partition count is the bucket count by contract) and only adds one
     scheduling round per exchange: measured 5 jobs per fold call with
@@ -167,6 +188,13 @@ def _plan_pinned(s, n_buckets: int):
     finally:
         s.conf.set("spark.sql.adaptive.enabled", saved_aqe)
         s.conf.set("spark.sql.shuffle.partitions", saved_sp)
+
+
+def _buckets_of(df: DataFrame) -> tuple[int, ...]:
+    """The distinct ``bucket`` values of ``df``: at most n_buckets ints,
+    so one partial aggregate per input partition feeds ONE final task
+    instead of an n_buckets-wide distinct."""
+    return tuple(sorted(df.agg(F.collect_set("bucket")).collect()[0][0]))
 
 
 def _has_state(state_dir: str) -> bool:
@@ -228,13 +256,18 @@ def _check_epoch(state_dir: str, epoch: str) -> bool:
     return False
 
 
-def _stamp_epoch(state_dir: str, epoch: str) -> None:
-    os.makedirs(state_dir, exist_ok=True)
-    path = os.path.join(state_dir, _EPOCH_FILE)
+def _write_atomic(path: str, text: str) -> None:
+    """Commit a driver-side sidecar by tmp + rename: a reader sees the
+    old content or the new, never a torn file."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:
-        f.write(epoch)
+        f.write(text)
     os.replace(tmp, path)
+
+
+def _stamp_epoch(state_dir: str, epoch: str) -> None:
+    _write_atomic(os.path.join(state_dir, _EPOCH_FILE), epoch)
 
 
 def _stamp_monoid(state_dir: str, key: str, cols: dict[str, str]) -> None:
@@ -250,11 +283,130 @@ def _stamp_monoid(state_dir: str, key: str, cols: dict[str, str]) -> None:
         with open(path, encoding="utf-8") as f:
             if f.read() == json.dumps(doc):
                 return
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(json.dumps(doc))
-    os.replace(tmp, path)
+    _write_atomic(path, json.dumps(doc))
+
+
+def _as_nullable(t):
+    """A column type's JSON form with every nested field, element and
+    value nullable and field metadata dropped — what a parquet file
+    read reports whatever nullability the writer's plan carried, so a
+    stamp compares and reads exactly like a footer-merged schema."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {
+            "type": "struct",
+            "fields": [_field(f["name"], f["type"]) for f in t["fields"]],
+        }
+    if t["type"] == "array":
+        return {
+            **t,
+            "elementType": _as_nullable(t["elementType"]),
+            "containsNull": True,
+        }
+    if t["type"] == "map":
+        return {
+            **t,
+            "keyType": _as_nullable(t["keyType"]),
+            "valueType": _as_nullable(t["valueType"]),
+            "valueContainsNull": True,
+        }
+    return t
+
+
+def _field(name: str, type_json) -> dict:
+    return {
+        "name": name,
+        "type": _as_nullable(type_json),
+        "nullable": True,
+        "metadata": {},
+    }
+
+
+def _stamp_fields(schema) -> dict:
+    """A StructType's data columns (``bucket`` excluded) in stamp form:
+    name → type JSON, in column order."""
+    return {
+        f["name"]: _as_nullable(f["type"])
+        for f in json.loads(schema.json())["fields"]
+        if f["name"] != "bucket"
+    }
+
+
+def _write_stamp(path: str, fields: dict) -> None:
+    _write_atomic(path, json.dumps(fields, separators=(",", ":")))
+
+
+def _stamp_schema(state_dir: str, written) -> None:
+    """Merge the data schema a fold is about to write (``written``, a
+    StructType; the ``bucket`` partition column is implied) into the
+    store's ``_schema.json`` stamp. Called BEFORE the data write and
+    committed by tmp + rename, so the stamp always covers every
+    committed file. ADD-only like the evolution envelope: new columns
+    append, a column whose type changes raises (a footer merge would
+    fail on it too), and a write that drops a stamped column deletes
+    the stamp — reads of that layout go back to merging footers. A
+    standing layout with no stamp (written before the stamp existed,
+    or after a drop) stays unstamped: its merged schema is only known
+    from its footers. Rewritten only on change, so a fenced replay
+    leaves the directory byte-identical."""
+    path = os.path.join(state_dir, _SCHEMA_FILE)
+    fields = _stamp_fields(written)
+    if os.path.exists(path):
+        with open(path, encoding="utf-8") as f:
+            stamped = json.load(f)
+    elif _has_state(state_dir):
+        return
+    else:
+        stamped = {}
+    if any(name not in fields for name in stamped):
+        os.remove(path)
+        return
+    for name, t in stamped.items():
+        if fields[name] != t:
+            raise RuntimeError(
+                f"state at {state_dir}: column {name!r} is stamped as "
+                f"{t!r} but this fold writes {fields[name]!r}. The schema "
+                "envelope is ADD-only; a type change needs a migration "
+                "(rebucket_state rewrites every file)."
+            )
+    merged = {**stamped, **fields}  # stamped columns keep their order
+    if merged == stamped and os.path.exists(path):
+        return
+    _write_stamp(path, merged)
+
+
+def _stamped_schema(state_dir: str):
+    """The layout's stamped schema (data columns, then ``bucket int``),
+    or None for an unstamped layout."""
+    from pyspark.sql.types import StructType
+
+    path = os.path.join(state_dir, _SCHEMA_FILE)
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        fields = json.load(f)
+    return StructType.fromJson(
+        {
+            "type": "struct",
+            "fields": [
+                *(_field(n, t) for n, t in fields.items()),
+                _field("bucket", "integer"),
+            ],
+        }
+    )
+
+
+def read_layout(spark, state_dir: str) -> DataFrame:
+    """The layout as stored — every data column plus the ``_b`` fence
+    and the ``bucket`` partition column — for probes that prune by
+    bucket. Reads through the ``_schema.json`` stamp when the layout
+    has one, so building the frame submits no Spark job; an unstamped
+    layout merges footers (one job)."""
+    schema = _stamped_schema(state_dir)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(state_dir)
+    return spark.read.schema(schema).parquet(state_dir)
 
 
 def state_bucket_count(state_dir: str, default: int) -> int:
@@ -328,11 +480,7 @@ def _check_layout(state_dir: str, n_buckets: int, spark, key: str) -> None:
                 "bucket count (or rebucket_state it) before folding — "
                 "adopting the wrong count would silently duplicate keys."
             )
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(str(n_buckets))
-    os.replace(tmp, path)
+    _write_atomic(path, str(n_buckets))
 
 
 def bucketed_latest_fold(
@@ -463,16 +611,12 @@ def bucketed_latest_fold(
             .filter(F.col("_n") == 0)
             .select(*out.columns)
         )
+        _stamp_schema(state_dir, checked.schema)
         counts = _bucket_file_counts(state_dir)
         over = {b for b, c in counts.items() if c >= _COMPACT_SEGMENTS}
         if over and todo is None:
             with _plan_pinned(s, n_buckets):
-                todo = tuple(
-                    sorted(
-                        r[0]
-                        for r in rows.select("bucket").distinct().collect()
-                    )
-                )
+                todo = _buckets_of(rows)
         compact = sorted(over & set(todo)) if todo is not None else []
         append_part = (
             checked
@@ -538,9 +682,7 @@ def bucketed_latest_fold(
             touched = tuple(sorted(set(touched_hint)))
         else:
             with _plan_pinned(s, n_buckets):
-                touched = tuple(
-                    sorted(r[0] for r in rows.select("bucket").distinct().collect())
-                )
+                touched = _buckets_of(rows)
         if touched_log is not None:
             touched_log.append((batch_id, touched))
         if not touched:  # empty batch (e.g. a no-data trigger): no-op
@@ -548,20 +690,19 @@ def bucketed_latest_fold(
         if immutable:
             todo = touched
             if _has_state(state_dir):
-                # replay fence: per-bucket max(_b) over the touched
-                # buckets (column-pruned scan — reads two thin columns,
-                # never payloads); buckets already stamped with this or
-                # a later batch were committed by a previous attempt
+                # replay fence: a touched bucket holding any row with
+                # _b >= batch_id (i.e. max(_b) >= batch_id) was
+                # committed by a previous attempt. Column-pruned scan of
+                # two thin columns; parquet row-group stats on _b skip
+                # older segments
                 with _plan_pinned(s, n_buckets):
-                    applied = {
-                        r["bucket"]
-                        for r in s.read.parquet(state_dir)
-                        .filter(F.col("bucket").isin(list(touched)))
-                        .groupBy("bucket")
-                        .agg(F.max("_b").alias("mb"))
-                        .filter(F.col("mb") >= batch_id)
-                        .collect()
-                    }
+                    applied = set(
+                        _buckets_of(
+                            read_layout(s, state_dir)
+                            .filter(F.col("bucket").isin(list(touched)))
+                            .filter(F.col("_b") >= batch_id)
+                        )
+                    )
                 todo = tuple(b for b in touched if b not in applied)
                 if not todo:
                     frontier[0] = max(frontier[0] or -1, batch_id)
@@ -569,12 +710,13 @@ def bucketed_latest_fold(
             _imm_append(s, rows, batch_id, todo)
             frontier[0] = max(frontier[0] or -1, batch_id)
             return
+        written = rows.schema
         if _has_state(state_dir):
             # the batch schema is authoritative (add-only evolution, see
             # module docstring): reading standing files THROUGH it NULL-
             # fills columns the batch just added, drops columns the batch
             # stopped sending, and skips footer-based schema inference
-            standing = s.read.schema(rows.schema).parquet(state_dir).filter(
+            standing = s.read.schema(written).parquet(state_dir).filter(
                 F.col("bucket").isin(list(touched))
             )
             rows = standing.unionByName(rows)
@@ -591,26 +733,39 @@ def bucketed_latest_fold(
         # ranking; ties are impossible across distinct payloads by the
         # caller contract (total (order_cols, key) ranking), and
         # replay-duplicate rows tie only with byte-identical rows.
-        payload = [c for c in rows.columns if c != key]
-        aggs = [
-            F.max_by(
-                F.struct(*payload), F.struct(*[F.col(c) for c in order_cols])
-            ).alias("_w")
-        ]
+        #
         # bucket_col functional-dependence assert (ADVICE r12): rides
         # the SAME per-key aggregation (min/max of bucket in the same
         # partial agg — no extra exchange) and is folded into a filter
         # so column pruning cannot elide it — a key seen in two buckets
         # among the rows this batch reads is a contract violation that
-        # would otherwise become silent duplicate state. Skipped when
-        # bucketing on the key itself (FD by construction).
+        # would otherwise become silent duplicate state. It needs the
+        # key grouped ACROSS buckets: an exchange on the key, then a
+        # second one clustering writers by bucket. Bucketing on the key
+        # itself (FD by construction) needs neither: bucket is a
+        # function of the key, so the rows are partitioned by bucket
+        # ONCE and grouped by (key, bucket) inside that partitioning —
+        # one exchange, one file per touched bucket, and the writers
+        # are already clustered (the r15 ``_imm_append`` idiom).
         fd_check = bucket_col is not None and bucket_col != key
+        if fd_check:
+            keys = [key]
+            grouped = rows.groupBy(key)
+        else:
+            keys = [key, "bucket"]
+            grouped = rows.repartition(n_buckets, F.col("bucket")).groupBy(*keys)
+        payload = [c for c in rows.columns if c not in keys]
+        aggs = [
+            F.max_by(
+                F.struct(*payload), F.struct(*[F.col(c) for c in order_cols])
+            ).alias("_w")
+        ]
         if fd_check:
             aggs += [
                 F.min("bucket").alias("_bmin"),
                 F.max("bucket").alias("_bmax"),
             ]
-        g = rows.groupBy(key).agg(*aggs)
+        g = grouped.agg(*aggs)
         if fd_check:
             fd_ok = F.coalesce(
                 F.assert_true(
@@ -628,21 +783,18 @@ def bucketed_latest_fold(
                 ).cast("int"),
                 F.lit(0),
             )
-        else:
-            fd_ok = F.lit(0)
-        merged = (
-            g.withColumn("_fd", fd_ok)
-            .filter(F.col("_fd") == 0)
-            .select(key, "_w.*")
-            .select(*rows.columns)  # restore the layout's column order
+            g = g.withColumn("_fd", fd_ok).filter(F.col("_fd") == 0)
+        # unpack the winners in the layout's column order
+        merged = g.select(
+            *(c if c in keys else f"_w.{c}" for c in rows.columns)
+        )
+        if fd_check:
             # cluster writers by bucket: ONE file per touched bucket per
             # batch instead of (shuffle tasks × buckets) shards — the
-            # small-file guard; the aggregation already shuffled by key,
-            # so this moves only the touched buckets' winners once more
-            # (n_buckets target partitions, not shuffle.partitions —
-            # no point scheduling more writer tasks than buckets)
-            .repartition(n_buckets, F.col("bucket"))
-        )
+            # small-file guard; the aggregation shuffled by key, so this
+            # moves only the touched buckets' winners once more
+            merged = merged.repartition(n_buckets, F.col("bucket"))
+        _stamp_schema(state_dir, written)
         saved = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
@@ -691,10 +843,9 @@ def bucketed_additive_fold(
     transactional table format (Delta / Iceberg MERGE), where data and
     fence commit together.
 
-    The batch is partially aggregated per (key, bucket) BEFORE the
-    merge — map-side combine keeps the shuffle O(distinct batch keys),
-    and the standing read prunes to touched buckets, so per-batch cost
-    is O(|batch| + touched buckets), never O(|state|).
+    The batch is aggregated per (key, bucket) inside its one exchange
+    on bucket, and the standing read prunes to touched buckets, so
+    per-batch cost is O(|batch| + touched buckets), never O(|state|).
 
     The ``_b`` fence is only meaningful within ONE monotone batch-id
     sequence — i.e. one checkpoint. Pass ``epoch`` (any stable string
@@ -765,9 +916,9 @@ def bucketed_monoid_fold(
     epoch days, decimals as scaled integers, register words as longs;
     exactness end-to-end is the point of the fenced fold.
 
-    Cost shape (r15, log-structured): per batch, one map-side-combined
-    partial aggregation of the batch (O(distinct batch keys) on the
-    exchange) APPENDED as a new segment under the touched bucket
+    Cost shape (r15, log-structured): per batch, one exchange of the
+    batch on bucket and a per-(key, bucket) aggregation inside it,
+    APPENDED as a new segment under the touched bucket
     partitions — the standing contents are no longer read or rewritten
     per trigger (the same O(delta) discipline the immutable latest
     fold got in r14, here for MUTABLE monoid state: the segments are
@@ -807,27 +958,24 @@ def bucketed_monoid_fold(
         part = partial if todo is None else partial.filter(
             F.col("bucket").isin(list(todo))
         )
+        _stamp_schema(state_dir, partial.schema)
         counts = _bucket_file_counts(state_dir)
         over = {b for b, c in counts.items() if c >= _COMPACT_SEGMENTS}
         if over and todo is None:
             with _plan_pinned(s, n_buckets):
-                todo = tuple(
-                    sorted(
-                        r[0]
-                        for r in part.select("bucket").distinct().collect()
-                    )
-                )
                 part = part.localCheckpoint(eager=True)
+                todo = _buckets_of(part)
         compact = sorted(over & set(todo)) if todo is not None else []
         if not (todo is not None and len(compact) == len(todo)):
+            # the partials are already partitioned by bucket (see
+            # ``partial`` below): one file per touched bucket, no
+            # second exchange
             with _plan_pinned(s, n_buckets):
                 (
                     part.filter(~F.col("bucket").isin(compact))
                     if compact
                     else part
-                ).repartition(n_buckets, F.col("bucket")).write.partitionBy(
-                    "bucket"
-                ).mode("append").parquet(state_dir)
+                ).write.partitionBy("bucket").mode("append").parquet(state_dir)
         if compact:
             # fold the bucket's segments + this batch's partial down to
             # one row per key; max(_b) per key keeps the bucket's fence
@@ -839,9 +987,9 @@ def bucketed_monoid_fold(
             )
             merged = (
                 standing.unionByName(part.filter(F.col("bucket").isin(compact)))
+                .repartition(len(compact), F.col("bucket"))
                 .groupBy(key, "bucket")
                 .agg(*aggs, F.max("_b").alias("_b"))
-                .repartition(len(compact), F.col("bucket"))
             )
             saved = s.conf.get(
                 "spark.sql.sources.partitionOverwriteMode", "static"
@@ -864,10 +1012,16 @@ def bucketed_monoid_fold(
         adopted = False
         if epoch is not None:
             adopted = _check_epoch(state_dir, epoch)
+        # partition by bucket FIRST, then aggregate inside that
+        # partitioning: (key, bucket) groups never span partitions, so
+        # the batch crosses ONE exchange and the append writes one file
+        # per touched bucket. The price is no map-side combine: the
+        # exchange carries batch rows, not per-key partials.
+        rows = batch_df.withColumn(
+            "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+        )
         partial = (
-            batch_df.withColumn(
-                "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-            )
+            rows.repartition(n_buckets, F.col("bucket"))
             .groupBy(key, "bucket")
             .agg(*aggs)
             .withColumn("_b", F.lit(batch_id).cast("long"))
@@ -888,12 +1042,7 @@ def bucketed_monoid_fold(
             touched = tuple(sorted(set(touched_hint)))
         else:
             with _plan_pinned(s, n_buckets):
-                touched = tuple(
-                    sorted(
-                        r[0]
-                        for r in partial.select("bucket").distinct().collect()
-                    )
-                )
+                touched = _buckets_of(rows)
         todo = touched
         if _has_state(state_dir):
             if adopted:
@@ -929,21 +1078,18 @@ def bucketed_monoid_fold(
             # yields NULL for keys with no contribution since it appeared
             if touched:
                 # replay fence: buckets already stamped with this (or a
-                # later) batch_id were committed by a previous attempt —
-                # bounded collect, <= n_buckets rows
+                # later) batch_id — any row with _b >= batch_id, i.e.
+                # max(_b) >= batch_id — were committed by a previous
+                # attempt; bounded collect, <= n_buckets ints
                 standing = (
                     s.read.schema(partial.schema)
                     .parquet(state_dir)
                     .filter(F.col("bucket").isin(list(touched)))
                 )
                 with _plan_pinned(s, n_buckets):
-                    applied = {
-                        r["bucket"]
-                        for r in standing.groupBy("bucket")
-                        .agg(F.max("_b").alias("mb"))
-                        .filter(F.col("mb") >= batch_id)
-                        .collect()
-                    }
+                    applied = set(
+                        _buckets_of(standing.filter(F.col("_b") >= batch_id))
+                    )
                 todo = tuple(b for b in touched if b not in applied)
             if not todo:
                 if touched_log is not None:
@@ -1009,28 +1155,19 @@ def compact_expired_tombstones(
     safe direction (GC delayed, never wrong). ``None`` keeps the full
     probe.
     """
-    from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
     if probe_buckets is not None:
         probe_buckets = sorted(set(probe_buckets))
         if not probe_buckets:
             return ()
     expired = F.coalesce(expired, F.lit(False))
-    state = spark.read.option("mergeSchema", "true").parquet(state_dir)
+    state = read_layout(spark, state_dir)
     if probe_buckets is not None:
         state = state.filter(F.col("bucket").isin(probe_buckets))
-    dirty = tuple(
-        sorted(
-            r[0]
-            for r in state.filter(expired).select("bucket").distinct().collect()
-        )
-    )
+    dirty = _buckets_of(state.filter(expired))
     if not dirty:
         return dirty
     survivors = state.filter(F.col("bucket").isin(list(dirty))).filter(~expired)
-    surviving = {
-        r[0] for r in survivors.select("bucket").distinct().collect()
-    }
+    surviving = set(_buckets_of(survivors))
     if surviving:
         saved = spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "static"
@@ -1052,9 +1189,12 @@ def compact_expired_tombstones(
 def read_state(spark, state_dir: str) -> DataFrame:
     """The maintained table, layout/fencing columns dropped (bucket and
     _b are implementation details, not part of the keyed-state
-    contract). mergeSchema: mid-evolution the layout is legitimately
-    mixed-schema (touched buckets carry the added column, untouched
-    ones not yet), so the read must merge footers, not trust one file.
+    contract). Mid-evolution the layout is legitimately mixed-schema
+    (touched buckets carry the added column, untouched ones not yet),
+    so the read must not trust one file's footer: it reads through the
+    ``_schema.json`` stamp (the merge of every schema the folds wrote,
+    no Spark job), or merges footers on an unstamped layout (see
+    :func:`read_layout`).
 
     Log-structured monoid layouts (r15): when the ``_monoid.json``
     sidecar is present the directory holds per-batch PARTIALS, and the
@@ -1066,9 +1206,7 @@ def read_state(spark, state_dir: str) -> DataFrame:
     keys with no contribution since it appeared, matching the eager
     path's envelope).
     """
-    df = (
-        spark.read.option("mergeSchema", "true").parquet(state_dir).drop("bucket")
-    )
+    df = read_layout(spark, state_dir).drop("bucket")
     mpath = os.path.join(state_dir, _MONOID_FILE)
     if os.path.exists(mpath):
         with open(mpath, encoding="utf-8") as f:
@@ -1090,14 +1228,15 @@ def rebucket_state(
     reshuffle, not a hand-rolled rewrite. Returns the new layout's
     bucket ids.
 
-    One shuffle: read everything (mergeSchema — a mid-evolution layout
-    migrates too), recompute ``bucket = pmod(xxhash64(key), new_B)``,
-    write the new layout to a sibling staging directory, then swap
-    directories. Every non-layout column — including the additive
-    fold's per-row ``_b`` fence stamp and the ``_epoch`` checkpoint
-    stamp — is carried verbatim, so replay fencing survives: a replayed
-    batch sees ``max(_b)`` per NEW bucket >= the stamp of every old
-    bucket that contributed rows, and skips exactly as before.
+    One shuffle: read everything (through the merged schema — a
+    mid-evolution layout migrates too), recompute
+    ``bucket = pmod(xxhash64(key), new_B)``, write the new layout to a
+    sibling staging directory, then swap directories. Every non-layout
+    column — including the additive fold's per-row ``_b`` fence stamp
+    and the ``_epoch`` checkpoint stamp — is carried verbatim, so replay
+    fencing survives: a replayed batch sees ``max(_b)`` per NEW bucket
+    >= the stamp of every old bucket that contributed rows, and skips
+    exactly as before.
 
     QUIESCE FIRST. The fence is per-bucket, so mixing rows from an old
     bucket stamped through batch N with rows from one stamped through
@@ -1115,9 +1254,7 @@ def rebucket_state(
     """
     if not _has_state(state_dir):
         raise ValueError(f"no committed state at {state_dir}")
-    df = (
-        spark.read.option("mergeSchema", "true").parquet(state_dir).drop("bucket")
-    )
+    df = read_layout(spark, state_dir).drop("bucket")
     out = df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(new_n_buckets)).cast("int")
     )
@@ -1137,17 +1274,19 @@ def rebucket_state(
     # conservatively; silently DROPPING it instead would read as
     # "fresh state", which for the tomb-vmin bound means the migrated
     # tombstones are never probed again. `_SUCCESS` belongs to the new
-    # write and `_n_buckets` is restamped below.
+    # write; `_n_buckets` and `_schema.json` are restamped below (every
+    # new file carries the full read schema, so even a layout that had
+    # lost its schema stamp leaves the migration stamped).
     for name in os.listdir(state_dir):
         src = os.path.join(state_dir, name)
         if (
             name.startswith("_")
-            and name not in ("_SUCCESS", _LAYOUT_FILE)
+            and name not in ("_SUCCESS", _LAYOUT_FILE, _SCHEMA_FILE)
             and os.path.isfile(src)
         ):
             shutil.copy2(src, os.path.join(tmp, name))
-    with open(os.path.join(tmp, _LAYOUT_FILE), "w", encoding="utf-8") as f:
-        f.write(str(new_n_buckets))
+    _write_atomic(os.path.join(tmp, _LAYOUT_FILE), str(new_n_buckets))
+    _write_stamp(os.path.join(tmp, _SCHEMA_FILE), _stamp_fields(df.schema))
     os.rename(state_dir, old)
     os.rename(tmp, state_dir)
     shutil.rmtree(old)
